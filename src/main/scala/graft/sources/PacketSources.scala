@@ -4,50 +4,23 @@ import graft.streaming.RawPacket
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming packet sources for the OCS pipeline — the graft twins of
-  * the reference's ingestion surface:
+/** Packet sources for driving the OCS pipeline without a live
+  * listener (production ingests through `graft-multisocket`, see
+  * `MultiSocketSource`):
   *
-  *  - `socket`: live TCP text ingestion (the reference's Ranch
-  *    listener, lib/trike/proxy.ex:64-83) via Structured Streaming's
-  *    socket source. Each line is one packet payload from the one
-  *    connection the socket represents.
   *  - `fake`: deterministic synthetic packet generator (the
   *    reference's mix task lib/mix/tasks/fake_source.ex — canned
   *    messages, optional heartbeats every 30th message, EOT-joined)
   *    built on the rate source, so it scales its event rate with the
   *    trigger and needs no external process.
+  *  - `replay`: the testdata-derived packet fixture as a static frame.
   *
   * Both produce the RawPacket shape `OcsPipeline.cloudEvents` and
-  * `StatefulFraming.frames` consume, so source choice is one line.
+  * `StatefulFraming.frames` consume.
   */
 object PacketSources {
 
   private val EOT = graft.streaming.OcsPipeline.EOT
-
-  /** TCP text source: one RawPacket per line, keyed as a single
-    * connection `host:port`. Spark's socket source is documented as
-    * test-only — a production deployment swaps in a durable bus source
-    * with the same output schema. */
-  def socket(spark: SparkSession, host: String, port: Int): Dataset[RawPacket] = {
-    import spark.implicits._
-    spark.readStream
-      .format("socket")
-      .option("host", host).option("port", port)
-      .option("includeTimestamp", true)
-      .load() // (value: String, timestamp: Timestamp)
-      .as[(String, java.sql.Timestamp)]
-      // Arrival-order seq via a per-partition counter: the socket
-      // source is single-partition, so partition order IS line-arrival
-      // order, and the framing sort only needs a within-batch tiebreak.
-      // (monotonically_increasing_id() is rejected in streaming plans.)
-      .mapPartitions { it =>
-        var i = 0L
-        it.map { case (line, ts) =>
-          i += 1
-          RawPacket(s"$host:$port", host, ts, line + EOT, i)
-        }
-      }
-  }
 
   /** Synthetic OCS traffic: `rowsPerSecond` packets/s spread over
     * `nConns` connections; every 30th message per the heartbeat cadence

@@ -21,6 +21,7 @@ final class KinesisLikeSink extends KeyedOrderedSink.PutClient {
 
   private val records = mutable.ArrayBuffer.empty[PutRecord]
   private val lastSeq = mutable.Map.empty[String, Long]
+  private val perBatch = mutable.Map.empty[(String, Long), Long]
   private var nextSeq = 0L
 
   /** Put one record; `seqForOrdering` must be the sequence number
@@ -34,6 +35,8 @@ final class KinesisLikeSink extends KeyedOrderedSink.PutClient {
     nextSeq += 1
     lastSeq(partitionKey) = nextSeq
     records += PutRecord(partitionKey, nextSeq, data, batchId)
+    val run = (partitionKey, batchId)
+    perBatch(run) = perBatch.getOrElse(run, 0L) + 1
     nextSeq
   }
 
@@ -44,8 +47,7 @@ final class KinesisLikeSink extends KeyedOrderedSink.PutClient {
     * committed-record count a durable service would persist alongside
     * the records themselves. */
   override def putsInBatch(partitionKey: String, batchId: Long): Long =
-    synchronized(records.count(r =>
-      r.partitionKey == partitionKey && r.batchId == batchId).toLong)
+    synchronized(perBatch.getOrElse((partitionKey, batchId), 0L))
 
   def all: Seq[PutRecord] = synchronized(records.toVector)
 

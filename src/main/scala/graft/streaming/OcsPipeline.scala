@@ -26,13 +26,12 @@ final case class RawPacket(connId: String, sourceIp: String,
   * CloudEvent build lib/trike/cloud_event.ex:31-44, one clock read per
   * packet proxy.ex:150, partition-keyed ordered put proxy.ex:171-204.
   *
-  * Like the reference's per-packet `extract/1`, framing here is
-  * within-packet: the partial tail after the last EOT is dropped
-  * rather than carried into the next packet's buffer (the reference
-  * carries it in connection state; the streaming twin of that carry is
-  * flatMapGroupsWithState keyed by connection — a planned r2 depth
-  * item; the fixture generators always emit whole frames per packet,
-  * so batch results are unaffected).
+  * `frames`/`cloudEvents` frame within each packet: the partial tail
+  * after the last EOT is dropped. The reference carries that tail in
+  * connection state (proxy.ex:154); `statefulCloudEvents` does the same
+  * through `StatefulFraming`, and is what `Main` runs. The fixture
+  * generators always emit whole frames per packet, so batch results
+  * are the same either way.
   *
   * Scale posture: framing/filter/projection are stateless and narrow —
   * they run at source parallelism with no shuffle; the only shuffle is
@@ -49,16 +48,9 @@ object OcsPipeline {
     * oracle SQL host-dependent, so the batch/oracle value comes from
     * SPARK_GRAFT_EVENT_SOURCE with a fixed default. A production
     * streaming deployment that wants hostname fidelity sets the env
-    * var to `hostEventSource`. */
+    * var to `<hostname>.mbta.com/trike`. */
   val eventSource: String =
     sys.env.getOrElse("SPARK_GRAFT_EVENT_SOURCE", "graft.mbta.com/trike")
-
-  /** The reference-faithful hostname-interpolated source string, for
-    * streaming deployments (cloud_event.ex:24). Not used in batch
-    * queries — see `eventSource`. */
-  def hostEventSource: String =
-    scala.util.Try(java.net.InetAddress.getLocalHost.getHostName)
-      .toOption.filter(_.nonEmpty).getOrElse("graft") + ".mbta.com/trike"
 
   /** packets(connId, sourceIp, receiveTs, payload) → one row per
     * complete frame, partial tail dropped. */
@@ -71,9 +63,14 @@ object OcsPipeline {
 
   /** Full pipeline: frames → drop heartbeats → CloudEvent columns.
     * Uses the faithful sha1 id (CloudEventId.sha1Base64). */
-  def cloudEvents(packets: DataFrame): DataFrame = {
+  def cloudEvents(packets: DataFrame): DataFrame = project(frames(packets))
+
+  /** frames(connId, sourceIp, receiveTs, message, pos) → heartbeats
+    * dropped → CloudEvent columns; shared by both pipeline variants so
+    * they derive the same ids. */
+  private def project(framed: DataFrame): DataFrame = {
     val timeIso = date_format(col("receiveTs"), isoFmt)
-    frames(packets)
+    framed
       .filter(col("message") =!= "HEARTBEAT")
       .select(
         CloudEventId.sha1Base64(timeIso, col("message")).as("id"),
@@ -97,30 +94,14 @@ object OcsPipeline {
       col("type")))
 
   /** The full stateful pipeline in one call: cross-packet buffer carry
-    * + stale markers (StatefulFraming), heartbeat filter, CloudEvent
-    * projection. `packets` must already carry a watermark on
-    * receiveTs. Stale markers pass through with kind="stale" so a
-    * monitoring sink can split them off. */
+    * and stale-connection logging (StatefulFraming), heartbeat filter,
+    * CloudEvent projection. `packets` must already carry a watermark on
+    * receiveTs. Every output row is a frame. */
   def statefulCloudEvents(packets: org.apache.spark.sql.Dataset[RawPacket],
-    staleTimeoutMs: Long): DataFrame = {
-    val timeIso = date_format(col("receiveTs"), isoFmt)
+    staleTimeoutMs: Long): DataFrame =
     // timestamp_micros, not _millis: the id is content-addressed over
     // the formatted time, so truncating here would give the stateful
     // and stateless variants different ids for the same packet.
-    StatefulFraming.frames(packets, staleTimeoutMs).toDF()
-      .withColumn("receiveTs", expr("timestamp_micros(receiveMicros)"))
-      .filter(col("kind") === "stale" || col("message") =!= "HEARTBEAT")
-      .select(
-        when(col("kind") === "frame",
-          graft.functions.CloudEventId.sha1Base64(timeIso, col("message")))
-          .as("id"),
-        col("connId").as("partitionkey"),
-        col("sourceIp").as("sourceip"),
-        timeIso.as("time"),
-        lit("com.mbta.ocs.raw_message").as("type"),
-        lit("1.0").as("specversion"),
-        lit(eventSource).as("source"),
-        col("message").as("raw"),
-        col("kind"), col("receiveTs"), col("pos"))
-  }
+    project(StatefulFraming.frames(packets, staleTimeoutMs).toDF()
+      .withColumn("receiveTs", expr("timestamp_micros(receiveMicros)")))
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.telemetry.Telemetry
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,14 +12,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stale timeout (proxy.ex:125-131, 232-240). */
 final case class ConnState(buffer: String, lastSeenMs: Long)
 
-/** One output row of the stateful pipeline: a completed frame, or a
-  * stale-connection marker (kind = "stale") when a connection sees no
-  * bytes within the timeout — the streaming twin of the reference
-  * closing idle sockets. Carries MICROseconds since epoch so the
-  * CloudEvent id/time derived downstream is bit-identical to the
-  * stateless path's full-precision timestamp. */
+/** One completed frame of the stateful pipeline. Carries
+  * MICROseconds since epoch so the CloudEvent id/time derived
+  * downstream is bit-identical to the stateless path's full-precision
+  * timestamp. */
 final case class FrameEvent(connId: String, sourceIp: String,
-  receiveMicros: Long, message: String, kind: String, pos: Long = 0L)
+  receiveMicros: Long, message: String, pos: Long = 0L)
 
 /** The stateful depth of the OCS pipeline that the stateless
   * `OcsPipeline.frames` can't express: EOT framing with the partial
@@ -34,8 +34,11 @@ object StatefulFraming {
   val EOT: String = OcsPipeline.EOT
 
   /** packets (already `.withWatermark("receiveTs", …)`) → frames with
-    * cross-packet buffer carry + stale markers after `staleTimeoutMs`
-    * of event-time inactivity. */
+    * cross-packet buffer carry. A connection idle for `staleTimeoutMs`
+    * of event time is dropped from state and logged as one
+    * `stale_connection` line from the executor — the reference closes
+    * and logs an idle socket inside its own proxy (proxy.ex:125-131);
+    * nothing about it travels the put path. */
   def frames(packets: Dataset[RawPacket], staleTimeoutMs: Long): Dataset[FrameEvent] = {
     import packets.sparkSession.implicits._
     packets
@@ -44,10 +47,10 @@ object StatefulFraming {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (connId: String, it: Iterator[RawPacket], state: GroupState[ConnState]) =>
           if (state.hasTimedOut) {
-            val st = state.get
+            val batchId = TaskContext.get().getLocalProperty("streaming.sql.batchId")
+            Telemetry.info(s"stale_connection conn=$connId batch=$batchId")
             state.remove()
-            Iterator.single(
-              FrameEvent(connId, "", st.lastSeenMs * 1000L, "", "stale", 0L))
+            Iterator.empty
           } else {
             // One extract() per packet in ARRIVAL order, buffer carried
             // between packets exactly like proxy.ex:154. The seq
@@ -70,7 +73,7 @@ object StatefulFraming {
                 p.receiveTs.getTime / 1000L * 1000000L + p.receiveTs.getNanos / 1000L
               val statements = (buf + p.payload).split(EOT, -1)
               statements.dropRight(1).foreach { m =>
-                out += FrameEvent(connId, p.sourceIp, micros, m, "frame", pos)
+                out += FrameEvent(connId, p.sourceIp, micros, m, pos)
                 pos += 1
               }
               buf = statements.last

@@ -15,11 +15,11 @@ import java.util.concurrent.atomic.AtomicLong
   * event, cleared afterwards).
   *
   * Spark-first rendition: [[Telemetry]] is a JVM-static fan-out — on
-  * the driver it carries pipeline lifecycle lines (health checks,
-  * stale closes), and because executor code resolves the same module
-  * statically, per-task lines land in each executor's own local
-  * backend exactly like any production Spark log4j topology; nothing
-  * is shipped through the driver. Metadata rides a ThreadLocal so
+  * the driver it carries pipeline lifecycle lines (health checks),
+  * and because executor code resolves the same module statically,
+  * per-task lines (put runs, stale closes) land in each executor's own
+  * local backend exactly like any production Spark log4j topology;
+  * nothing is shipped through the driver. Metadata rides a ThreadLocal so
   * concurrent tasks never interleave tags.
   *
   * The Splunk twin ships events through a `transport` port (HEC is an

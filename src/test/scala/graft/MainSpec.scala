@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The deployable entrypoint (graft.Main — application.ex twin):
   * drives Main.start's exact production wiring — watermark → stateful
-  * framing → CloudEvent JSON → keyed ordered puts + stale split, with
-  * a real checkpointLocation — from a MemoryStream into the in-memory
-  * Kinesis twin. */
+  * framing → CloudEvent JSON → keyed ordered puts, with a real
+  * checkpointLocation — from a MemoryStream into the in-memory Kinesis
+  * twin. */
 class MainSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.test
   private val EOT = OcsPipeline.EOT
@@ -22,35 +22,35 @@ class MainSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-main-ckpt").toString
     MainSpec.sharedSink = new KinesisLikeSink
-    val stale = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val cfg = Main.Config(
       staleTimeoutMs = 3600 * 1000L, checkpointDir = ckpt,
       queryName = "graft-main-spec")
 
     val input = MemoryStream[RawPacket]
-    val query = Main.start(input.toDS(), cfg,
-      () => MainSpec.sharedSink, publish = stale.add(_))
-    try {
-      assert(query.name == "graft-main-spec")
-      // Two frames + a heartbeat + a carried partial for conn-a, one
-      // frame for conn-b.
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"),
-          s"m1${EOT}HEARTBEAT${EOT}m2${EOT}par"),
-        RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
-      query.processAllAvailable()
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}"))
-      query.processAllAvailable()
-      // Advance the watermark far enough for conn-b (idle since
-      // 10:00) to cross the 1h stale timeout.
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m3${EOT}"))
-      query.processAllAvailable()
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m4${EOT}"))
-      query.processAllAvailable()
-    } finally query.stop()
+    val query = Main.start(input.toDS(), cfg, () => MainSpec.sharedSink)
+    val lines = TelemetryCapture {
+      try {
+        assert(query.name == "graft-main-spec")
+        // Two frames + a heartbeat + a carried partial for conn-a, one
+        // frame for conn-b.
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"),
+            s"m1${EOT}HEARTBEAT${EOT}m2${EOT}par"),
+          RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
+        query.processAllAvailable()
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}"))
+        query.processAllAvailable()
+        // Advance the watermark far enough for conn-b (idle since
+        // 10:00) to cross the 1h stale timeout.
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m3${EOT}"))
+        query.processAllAvailable()
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m4${EOT}"))
+        query.processAllAvailable()
+      } finally query.stop()
+    }
 
     val sink = MainSpec.sharedSink
     val a = sink.byKey("conn-a")
@@ -66,11 +66,12 @@ class MainSpec extends AnyFunSuite {
     assert(a.head.data.startsWith("{\"data\":"))
     assert(sink.byKey("conn-b").map(r =>
       ujsonField(r.data, "\"data\":{\"raw\":\"", "\"")) == Seq("b1"))
-    // conn-b went idle → exactly one stale_connection line published,
-    // and no stale marker was ever put to the sink.
-    val staleLines = stale.toArray.map(_.toString).toSeq
-    assert(staleLines.count(_.contains("conn=conn-b")) == 1, staleLines)
-    assert(sink.all.forall(_.data.contains("\"raw\"")))
+    // conn-b went idle → exactly one stale_connection line logged, and
+    // nothing but frames was ever put to the sink.
+    val staleLines = TelemetryCapture.stale(lines)
+    assert(staleLines.size == 1 && staleLines.head.contains("conn=conn-b"),
+      staleLines)
+    assert(sink.all.size == 6 && sink.all.forall(_.data.contains("\"raw\"")))
   }
 
   /** Tiny extractor: substring between `pre` and the next `post`. */
@@ -81,16 +82,14 @@ class MainSpec extends AnyFunSuite {
 
   test("Config resolves from env with reference-shaped keys") {
     val cfg = Main.fromEnv(Map(
-      "GRAFT_SOURCE" -> "socket", "GRAFT_HOST" -> "h", "GRAFT_PORT" -> "9099",
-      "GRAFT_STALE_TIMEOUT_MS" -> "1234", "GRAFT_CHECKPOINT_DIR" -> "/tmp/x"))
-    assert(cfg.source == "socket" && cfg.host == "h" && cfg.port == 9099)
+      "GRAFT_PORT" -> "9099", "GRAFT_STALE_TIMEOUT_MS" -> "1234",
+      "GRAFT_CHECKPOINT_DIR" -> "/tmp/x", "GRAFT_TRIGGER_MS" -> "250"))
+    assert(cfg.port == 9099 && cfg.triggerMs == 250L)
     assert(cfg.staleTimeoutMs == 1234L && cfg.checkpointDir == "/tmp/x")
-    // Unset keys keep deployable defaults: the production source is
-    // the multi-connection listener (the reference's Ranch boot), not
-    // the fake dev shim.
-    assert(Main.fromEnv(Map.empty).source == "multisocket")
-    intercept[IllegalArgumentException](
-      Main.packets(spark, Main.Config(source = "nope")))
+    // Unset keys keep deployable defaults (proxy.ex's 5 min stale
+    // timeout, the reference's listen port).
+    assert(Main.fromEnv(Map.empty) == Main.Config())
+    assert(Main.Config().port == 8001 && Main.Config().staleTimeoutMs == 300000L)
   }
 }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful framing: partial tails carried across packets per
-  * connection (proxy.ex:154) and event-time stale-session markers
-  * (proxy.ex:125-131). */
+  * connection (proxy.ex:154) and event-time stale-session detection,
+  * logged from the executor (proxy.ex:125-131). */
 class StatefulFramingSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.test
   private val EOT = StatefulFraming.EOT
@@ -26,36 +26,41 @@ class StatefulFramingSpec extends AnyFunSuite {
       .format("memory").queryName("stateful_frames")
       .start()
 
-    try {
-      // conn-a: frame m1 completes; "par" stays buffered.
-      // conn-b: one complete frame, then goes idle.
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"), s"m1${EOT}par"),
-        RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
-      query.processAllAvailable()
-      // conn-a: the buffered "par" completes into "partial".
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}m2${EOT}"))
-      query.processAllAvailable()
-      // advance the watermark far past conn-b's timeout…
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m3${EOT}"))
-      query.processAllAvailable()
-      // …and once more so the timed-out state fires and emits.
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m4${EOT}"))
-      query.processAllAvailable()
-    } finally query.stop()
+    val lines = TelemetryCapture {
+      try {
+        // conn-a: frame m1 completes; "par" stays buffered.
+        // conn-b: one complete frame, then goes idle.
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"), s"m1${EOT}par"),
+          RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
+        query.processAllAvailable()
+        // conn-a: the buffered "par" completes into "partial".
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}m2${EOT}"))
+        query.processAllAvailable()
+        // advance the watermark far past conn-b's timeout…
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m3${EOT}"))
+        query.processAllAvailable()
+        // …and once more so the timed-out state fires.
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m4${EOT}"))
+        query.processAllAvailable()
+      } finally query.stop()
+    }
 
     val rows = spark.table("stateful_frames")
       .as[graft.streaming.FrameEvent].collect()
-    val aFrames = rows.filter(r => r.connId == "conn-a" && r.kind == "frame")
+    val aFrames = rows.filter(_.connId == "conn-a")
       .sortBy(_.receiveMicros).map(_.message).toSeq
     assert(aFrames == Seq("m1", "partial", "m2", "m3", "m4"),
       s"cross-packet carry reassembles the split frame; got $aFrames")
-    val bStale = rows.filter(r => r.connId == "conn-b" && r.kind == "stale")
-    assert(bStale.length == 1, "idle conn-b emits exactly one stale marker")
-    assert(rows.count(r => r.connId == "conn-b" && r.kind == "frame") == 1)
+    val stale = TelemetryCapture.stale(lines)
+    assert(stale.size == 1 && stale.head.matches(
+      "stale_connection conn=conn-b batch=\\d+"),
+      s"idle conn-b logs exactly one stale line with its batch id; got $stale")
+    assert(rows.filter(_.connId == "conn-b").map(_.message).toSeq == Seq("b1"),
+      "the timeout emits no row")
   }
 
   test("equal-timestamp packets apply in arrival (seq) order, not payload order") {
@@ -83,7 +88,7 @@ class StatefulFramingSpec extends AnyFunSuite {
 
     val msgs = spark.table("seq_order_frames")
       .as[graft.streaming.FrameEvent].collect()
-      .filter(_.kind == "frame").map(_.message).toSeq
+      .map(_.message).toSeq
     assert(msgs == Seq("x1", "prefix"),
       s"strict arrival order (proxy.ex:154); got $msgs")
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-call composed pipeline: stateful framing → heartbeat
-  * filter → CloudEvent projection, stale markers passing through. */
+  * filter → CloudEvent projection; idle connections are logged, never
+  * emitted. */
 class StatefulPipelineSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.test
   private val EOT = OcsPipeline.EOT
@@ -25,32 +26,39 @@ class StatefulPipelineSpec extends AnyFunSuite {
       .format("memory").queryName("stateful_ce")
       .start()
 
-    try {
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"),
-          s"m1${EOT}HEARTBEAT${EOT}par"),
-        RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
-      query.processAllAvailable()
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}"))
-      query.processAllAvailable()
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m2${EOT}"))
-      query.processAllAvailable()
-      input.addData(
-        RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m3${EOT}"))
-      query.processAllAvailable()
-    } finally query.stop()
+    val lines = TelemetryCapture {
+      try {
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:00:00"),
+            s"m1${EOT}HEARTBEAT${EOT}par"),
+          RawPacket("conn-b", "10.0.0.2", ts("2026-01-01 10:00:00"), s"b1${EOT}"))
+        query.processAllAvailable()
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 10:10:00"), s"tial${EOT}"))
+        query.processAllAvailable()
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:00:00"), s"m2${EOT}"))
+        query.processAllAvailable()
+        input.addData(
+          RawPacket("conn-a", "10.0.0.1", ts("2026-01-01 13:30:00"), s"m3${EOT}"))
+        query.processAllAvailable()
+      } finally query.stop()
+    }
 
     val out = spark.table("stateful_ce")
-    val aRaw = out.filter(col("partitionkey") === "conn-a" && col("kind") === "frame")
+    assert(!out.columns.contains("kind"), s"no marker column: ${out.columns.toSeq}")
+    val aRaw = out.filter(col("partitionkey") === "conn-a")
       .orderBy(col("receiveTs")).select("raw").as[String].collect().toSeq
     assert(aRaw == Seq("m1", "partial", "m2", "m3"),
       "heartbeat dropped, split frame reassembled, CloudEvents in order")
-    assert(out.filter(col("kind") === "frame" && col("id").isNull).count() == 0,
-      "every frame gets a content-addressed id")
-    assert(out.filter(col("partitionkey") === "conn-b" && col("kind") === "stale")
-      .count() == 1, "idle conn-b surfaces as a stale marker")
+    assert(out.filter(col("id").isNull).count() == 0,
+      "every row is a frame with a content-addressed id")
+    assert(out.filter(col("partitionkey") === "conn-b")
+      .select("raw").as[String].collect().toSeq == Seq("b1"),
+      "idle conn-b contributes its frame and nothing else")
+    val stale = TelemetryCapture.stale(lines)
+    assert(stale.size == 1 && stale.head.startsWith("stale_connection conn=conn-b "),
+      s"idle conn-b surfaces as exactly one stale line; got $stale")
   }
 
   test("stateful and stateless pipelines derive identical CloudEvent ids") {
@@ -84,7 +92,6 @@ class StatefulPipelineSpec extends AnyFunSuite {
     } finally query.stop()
 
     val statefulIds = spark.table("id_parity_ce")
-      .filter(col("kind") === "frame")
       .select("id").as[String].collect().toSet
 
     assert(statelessIds.nonEmpty && statefulIds == statelessIds,
